@@ -116,7 +116,7 @@ object Bench {
       m.map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
       s""""queries":$qs,"times":$ts,"warmup_errors":${errObj(warmupErrors)},""" +
-      s""""errors":${errObj(queryErrors)},"sf":"$sfDir"}"""
+      s""""errors":${errObj(queryErrors)},"sf":${jq(sfDir)}}"""
     // The driver captures only a tail of stdout, which truncates the
     // per-query map once it outgrows the window — persist the full map as a
     // sidecar so every registered query's timing survives for comparison.
@@ -137,7 +137,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
       s""""n_queries":${results.size},"n_errors":${queryErrors.size},""" +
       s""""n_warmup_errors":${warmupErrors.size},"sidecar":${jq(sidecar)},""" +
-      s""""sf":"$sfDir"}""")
+      s""""sf":${jq(sfDir)}}""")
     spark.stop()
   }
 }

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   * bucket aggregation. That is the price of the hard cap: the codegen'd
   * alternatives (collect_list + size filter, or a df-count join feeding the
   * self-join) either unbound the buffer or re-shuffle the corpus, and the
-  * measured difference at sf0.1 is nil (ProfileCapped) while only this
+  * measured difference at sf0.1 is nil while only this
   * shape stays memory-safe at any skew.
   */
 case class CappedCollectList(

@@ -36,19 +36,13 @@ object Bpe {
                 checkpointEvery: Int = 4): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // RELIABLE checkpoint when the session has a checkpoint dir (a 100 TB
-    // tokenizer train should survive executor loss — localCheckpoint blocks
-    // die with their executor and the whole train restarts from zero);
-    // localCheckpoint otherwise (single-JVM / test runs, no dir needed).
-    // Either way the SUPERSEDED checkpoint is released once the new one
-    // materializes — both are eager, so by the time ckpt() returns the new
-    // lineage no longer reads the old blocks, and holding them would
-    // accumulate one vocab copy per checkpointEvery rounds for the life of
-    // the session.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
+    // The SUPERSEDED pin is released once the new one materializes — pins
+    // are eager, so by the time ckpt() returns the new lineage no longer
+    // reads the old blocks, and holding them would accumulate one vocab
+    // copy per checkpointEvery rounds for the life of the session.
     var prev: Option[Dataset[(Seq[String], Long)]] = None
     def ckpt(ds: Dataset[(Seq[String], Long)]): Dataset[(Seq[String], Long)] = {
-      val next = if (reliable) ds.checkpoint() else ds.localCheckpoint()
+      val next = Barrier.pin(ds)
       prev.foreach(_.unpersist())
       prev = Some(next)
       next

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines: exact, word-n-gram
   * Jaccard, MinHash+LSH, SimHash, embedding-cosine (see [[Similarity]]).
@@ -49,7 +50,7 @@ object Dedup {
     val hashed =
       if (packedArgmax)
         df.select(md5(TextAnalysis.normText(col(textCol))).as("content_hash"),
-            packArgmax(col(qualityCol), col(idCol)).as("__best"))
+            packArgmax(df, qualityCol, idCol).as("__best"))
           .groupBy("content_hash")
           .agg(min("__best").as("best"), count(lit(1)).as("n_docs"))
           .select(col("content_hash"),
@@ -77,14 +78,23 @@ object Dedup {
     * corpus shapes where quality is a length/score count and ids are
     * non-negative synthetic longs; data outside it raises instead of
     * silently mis-selecting. */
-  private def packArgmax(quality: Column, id: Column): Column = {
+  private def packArgmax(df: DataFrame, qualityCol: String, idCol: String): Column = {
+    // a fractional quality would truncate in the pack (5.7 and 5.2 tie and
+    // id order picks the winner), so only integral types are accepted
+    val qType = df.schema(qualityCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(qType),
+      s"packedArgmax needs an integral quality column: $qualityCol is " +
+        s"${qType.simpleString} (use the struct path for fractional qualities)")
+    val (quality, id) = (col(qualityCol), col(idCol))
     val ok = quality >= 0 && quality < lit(1L << 31) &&
       id >= 0 && id < lit(1L << 32)
     val packed = (lit((1L << 31) - 1) - quality.cast("long")) * lit(1L << 32) +
       id.cast("long")
+    // NULL parts print as "null": concat would otherwise null the message
+    def shown(c: Column) = coalesce(c.cast("string"), lit("null"))
     when(ok, packed).otherwise(raise_error(concat(
-      lit("packedArgmax bounds violated: quality="), quality.cast("string"),
-      lit(" id="), id.cast("string"),
+      lit("packedArgmax bounds violated: quality="), shown(quality),
+      lit(" id="), shown(id),
       lit(" (need 0 <= quality < 2^31, 0 <= id < 2^32)"))).cast("long"))
   }
   private def unpackArgmaxQuality(packed: Column): Column =
@@ -143,14 +153,7 @@ object Dedup {
     * gram (ADVICE r2: the old form thresholded an underestimate). */
   def jaccardPairs(df: DataFrame, n: Int = 3, threshold: Double = 0.5,
                    idCol: String = "doc_id", textCol: String = "text",
-                   maxDocFreq: Int = 0,
-                   /** materialize shared intermediates (the hashed gram
-                     * stream, the candidate pair set) with eager local
-                     * checkpoints instead of recomputing them per consumer
-                     * — measured ~1 s at sf0.1. `false` keeps the plan
-                     * fully lazy (plan-shape inspection, or callers that
-                     * pre-stage grams themselves). */
-                   materialize: Boolean = true): DataFrame = {
+                   maxDocFreq: Int = 0): DataFrame = {
     // No cache (r3 cached the exploded rows and never unpersisted — a leak
     // in a long-lived session, and pointless at 100 TB where the shingled
     // corpus doesn't fit in storage memory anyway). Instead the per-doc gram
@@ -194,15 +197,15 @@ object Dedup {
       // memory-bounded too, but its ObjectHashAggregate boxes every gram's
       // struct buffer, and on a low-skew corpus that costs ~3× this plan;
       // measured at sf0.1: 7.2 s bucket-collect vs 2.4 s subtractive.)
-      // materialize the hashed stream ONCE (eager executor-local
-      // checkpoint; (id, n_grams, gram) longs ≈ 24 B/row): the cap
+      // materialize the hashed stream ONCE ([[Barrier.pin]];
+      // (id, n_grams, gram) longs ≈ 24 B/row): the cap
       // machinery otherwise re-runs the tokenize+shingle scan four times —
       // for the df count, the anti-join, the per-doc heavy count, and the
       // self-join — measured ~1 s of pure recompute at sf0.1. At corpus
       // scale the same move is staging the gram table before the joins; a
       // pipeline that wants to avoid the materialization can pre-shingle
       // into a table and call the join stages itself.
-      val shxM = if (materialize) shx.localCheckpoint() else shx
+      val shxM = Barrier.pin(shx)
       val heavy = shxM.groupBy("gram").agg(count(lit(1)).as("__df"))
         .where(col("__df") > maxDocFreq).select("gram")
       val kept = shxM.join(heavy, Seq("gram"), "left_anti")
@@ -238,19 +241,16 @@ object Dedup {
           least(coalesce(col("ha"), lit(0L)), coalesce(col("hb"), lit(0L))))
       // division form IDENTICAL to finishJaccard: a multiply-form bound
       // (c >= t*(na+nb-c)) rounds differently and can drop exactly-at-
-      // threshold pairs the final division-form test would emit
-      val maybe = withBounds.where(
+      // threshold pairs the final division-form test would emit. Pinned:
+      // small (bounded candidate pairs), but three consumers below — the
+      // exact branch, the verify branch, and the verify corpus restriction
+      // — would each re-run the pair self-join without this barrier
+      val maybe = Barrier.pin(withBounds.where(
         (col("ck") + col("__hmin")).cast("double") /
-          (col("na") + col("nb") - col("ck") - col("__hmin")) >= lit(threshold))
-      val maybeM = if (materialize)
-        // small (bounded candidate pairs), but three consumers below — the
-        // exact branch, the verify branch, and the verify corpus restriction
-        // — would each re-run the pair self-join without this checkpoint
-        maybe.localCheckpoint()
-      else maybe
-      val exactNow = maybeM.where(col("__hmin") === 0)
+          (col("na") + col("nb") - col("ck") - col("__hmin")) >= lit(threshold)))
+      val exactNow = maybe.where(col("__hmin") === 0)
         .select(col("a"), col("b"), col("ck").as("common"), col("na"), col("nb"))
-      val needVerify = maybeM.where(col("__hmin") > 0).select("a", "b")
+      val needVerify = maybe.where(col("__hmin") > 0).select("a", "b")
       // only the boundary sliver re-verifies, and it does so over FULL
       // hashed gram sets REBUILT FROM THE STAGED STREAM (shxM carries
       // every gram, heavy included) — not by re-scanning and
@@ -309,19 +309,17 @@ object Dedup {
     * wherever candidate volume, not fixed overhead, dominates. */
   def jaccardPairsPrefix(df: DataFrame, n: Int = 3, threshold: Double = 0.5,
                          idCol: String = "doc_id", textCol: String = "text",
-                         maxDocFreq: Int = 20,
-                         materialize: Boolean = true): DataFrame = {
+                         maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "jaccardPairsPrefix needs a positive df cap")
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val shx = shingleArray(df, n, idCol, textCol)
+    val shx = Barrier.pin(shingleArray(df, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val shxM = if (materialize) shx.localCheckpoint() else shx
-    val dfCounts = shxM.groupBy("gram").agg(count(lit(1)).as("__df"))
+      .withColumn("gram", xxhash64(col("gram"))))
+    val dfCounts = shx.groupBy("gram").agg(count(lit(1)).as("__df"))
     // kept rows with the global df attached: the join keys on the gram —
     // co-partitioned with the aggregation that produced dfCounts
-    val kept = shxM.join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
+    val kept = shx.join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
     // per-doc prefix: kept grams sorted (df asc, gram asc) — a globally
     // consistent total order — sliced to k − cmin + 1 where
     // cmin = max(1, ⌈t·n⌉ − heavy). sort_array on (df, gram) structs
@@ -341,7 +339,7 @@ object Dedup {
       .select("a", "b")
     val candIds = cand.select(col("a").as(idCol))
       .unionByName(cand.select(col("b").as(idCol))).distinct()
-    val arr = shxM.join(candIds, Seq(idCol), "left_semi")
+    val arr = shx.join(candIds, Seq(idCol), "left_semi")
       .groupBy(idCol).agg(collect_list(col("gram")).as("grams"))
     verifyJaccard(cand, arr, threshold, idCol)
   }
@@ -437,16 +435,7 @@ object Dedup {
     * both sides. Output: (a = incoming id, b = corpus id, jaccard). */
   def jaccardAgainst(incoming: DataFrame, corpus: DataFrame, n: Int = 3,
                      threshold: Double = 0.5, idCol: String = "doc_id",
-                     textCol: String = "text", maxDocFreq: Int = 20,
-                     /** materialize the two hashed gram streams (and the
-                       * candidate bound split) with eager local checkpoints
-                       * — [[jaccardPairsPrefix]]' contract. The corpus
-                       * stream is referenced by the df count, the anti/semi
-                       * joins AND the sliver rebuild: without the barrier
-                       * each reference re-tokenizes and re-shingles the
-                       * whole corpus (shingleArray is scan-side — there is
-                       * no exchange for Catalyst to reuse). */
-                     materialize: Boolean = true): DataFrame = {
+                     textCol: String = "text", maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "jaccardAgainst needs a positive corpus df cap")
     // same subtractive cap + bounded verify as [[jaccardPairs]], with the
     // heavy set defined by CORPUS df: over-cap grams leave both streams,
@@ -456,16 +445,18 @@ object Dedup {
     // hashed 64-bit gram keys before any shuffle (see [[jaccardPairs]]);
     // the threshold-boundary sliver re-verifies over full hashed gram
     // sets rebuilt from these same streams, restricted to sliver docs
-    val corpusSh0 = shingleArray(corpus, n, idCol, textCol)
+    // the corpus stream is referenced by the df count, the anti/semi joins
+    // AND the sliver rebuild: without the barrier each reference
+    // re-tokenizes and re-shingles the whole corpus (shingleArray is
+    // scan-side — there is no exchange for Catalyst to reuse)
+    val corpusSh = Barrier.pin(shingleArray(corpus, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val newSh0 = shingleArray(incoming, n, idCol, textCol)
+      .withColumn("gram", xxhash64(col("gram"))))
+    val newSh = Barrier.pin(shingleArray(incoming, n, idCol, textCol)
       .select(col(idCol).as("a"), size(col("grams")).cast("long").as("na"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val corpusSh = if (materialize) corpusSh0.localCheckpoint() else corpusSh0
-    val newSh = if (materialize) newSh0.localCheckpoint() else newSh0
+      .withColumn("gram", xxhash64(col("gram"))))
     val heavy = corpusSh.groupBy("gram").agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxDocFreq).select("gram")
     val keptCorpus = corpusSh.join(heavy, Seq("gram"), "left_anti")
@@ -483,13 +474,12 @@ object Dedup {
       .join(corpusHeavy.select(col(idCol).as("b"), col("__h").as("__hb")), Seq("b"), "left")
       .withColumn("__hmin",
         least(coalesce(col("__h"), lit(0L)), coalesce(col("__hb"), lit(0L))))
-    // division form identical to finishJaccard (see jaccardPairs)
-    val maybe0 = withBounds.where(
+    // division form identical to finishJaccard (see jaccardPairs). The
+    // exact-now/sliver split reads `maybe` twice — pin the (small,
+    // post-prune) pair frame so the candidate join never re-runs
+    val maybe = Barrier.pin(withBounds.where(
       (col("ck") + col("__hmin")).cast("double") /
-        (col("na") + col("nb") - col("ck") - col("__hmin")) >= lit(threshold))
-    // the exact-now/sliver split reads `maybe` twice — checkpoint the
-    // (small, post-prune) pair frame so the candidate join never re-runs
-    val maybe = if (materialize) maybe0.localCheckpoint() else maybe0
+        (col("na") + col("nb") - col("ck") - col("__hmin")) >= lit(threshold)))
     val exactNow = maybe.where(col("__hmin") === 0)
       .select(col("a"), col("b"), col("ck").as("common"), col("na"), col("nb"))
     val needVerify = maybe.where(col("__hmin") > 0).select("a", "b")
@@ -534,20 +524,17 @@ object Dedup {
     * capped form's 183.6M, 14.8 s vs 32.1 s same-run (`SCALE_PROBE.md`). */
   def jaccardAgainstPrefix(incoming: DataFrame, corpus: DataFrame, n: Int = 3,
                            threshold: Double = 0.5, idCol: String = "doc_id",
-                           textCol: String = "text", maxDocFreq: Int = 20,
-                           materialize: Boolean = true): DataFrame = {
+                           textCol: String = "text", maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "jaccardAgainstPrefix needs a positive corpus df cap")
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val corpusSh0 = shingleArray(corpus, n, idCol, textCol)
+    val corpusSh = Barrier.pin(shingleArray(corpus, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val newSh0 = shingleArray(incoming, n, idCol, textCol)
+      .withColumn("gram", xxhash64(col("gram"))))
+    val newSh = Barrier.pin(shingleArray(incoming, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val corpusSh = if (materialize) corpusSh0.localCheckpoint() else corpusSh0
-    val newSh = if (materialize) newSh0.localCheckpoint() else newSh0
+      .withColumn("gram", xxhash64(col("gram"))))
     val dfCounts = corpusSh.groupBy("gram").agg(count(lit(1)).as("__df"))
     val keptCorpus = corpusSh
       .join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
@@ -608,18 +595,16 @@ object Dedup {
     * arrays rebuilt from the staged hashed stream. */
   def containmentPairs(df: DataFrame, n: Int = 3, threshold: Double = 0.8,
                        idCol: String = "doc_id", textCol: String = "text",
-                       maxDocFreq: Int = 20,
-                       materialize: Boolean = true): DataFrame = {
+                       maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "containmentPairs needs a positive df cap")
-    val shx = shingleArray(df, n, idCol, textCol)
+    val shx = Barrier.pin(shingleArray(df, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val shxM = if (materialize) shx.localCheckpoint() else shx
-    val heavy = shxM.groupBy("gram").agg(count(lit(1)).as("__df"))
+      .withColumn("gram", xxhash64(col("gram"))))
+    val heavy = shx.groupBy("gram").agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxDocFreq).select("gram")
-    val kept = shxM.join(heavy, Seq("gram"), "left_anti")
-    val heavyPerDoc = shxM.join(heavy, Seq("gram"), "left_semi")
+    val kept = shx.join(heavy, Seq("gram"), "left_anti")
+    val heavyPerDoc = shx.join(heavy, Seq("gram"), "left_semi")
       .groupBy(idCol).agg(count(lit(1)).as("__h"))
     val a = kept.select(col(idCol).as("a"), col("n_grams").as("na"), col("gram"))
     val b = kept.select(col(idCol).as("b"), col("n_grams").as("nb"), col("gram"))
@@ -633,16 +618,15 @@ object Dedup {
     // common ≤ ck + min(ha, hb), so (ck + hmin)/min(na, nb) is a lossless
     // upper bound on containment — prune below-threshold pairs before any
     // array work, emit hmin = 0 pairs exactly from ck
-    val maybe = withBounds.where(
+    val maybe = Barrier.pin(withBounds.where(
       (col("ck") + col("__hmin")).cast("double") /
-        least(col("na"), col("nb")) >= lit(threshold))
-    val maybeM = if (materialize) maybe.localCheckpoint() else maybe
-    val exactNow = maybeM.where(col("__hmin") === 0)
+        least(col("na"), col("nb")) >= lit(threshold)))
+    val exactNow = maybe.where(col("__hmin") === 0)
       .select(col("a"), col("b"), col("ck").as("common"), col("na"), col("nb"))
-    val needVerify = maybeM.where(col("__hmin") > 0).select("a", "b")
+    val needVerify = maybe.where(col("__hmin") > 0).select("a", "b")
     val candIds = needVerify.select(col("a").as(idCol))
       .unionByName(needVerify.select(col("b").as(idCol))).distinct()
-    val sliverArr = shxM.join(candIds, Seq(idCol), "left_semi")
+    val sliverArr = shx.join(candIds, Seq(idCol), "left_semi")
       .groupBy(idCol).agg(collect_list(col("gram")).as("grams"))
     val ga = sliverArr.select(col(idCol).as("a"), col("grams").as("__ga"))
     val gb = sliverArr.select(col(idCol).as("b"), col("grams").as("__gb"))
@@ -672,21 +656,16 @@ object Dedup {
   def containmentAgainst(incoming: DataFrame, corpus: DataFrame, n: Int = 3,
                          threshold: Double = 0.8, idCol: String = "doc_id",
                          textCol: String = "text",
-                         maxDocFreq: Int = 20,
-                         /** eager-checkpoint the gram streams and the bound
-                           * split — same rationale as [[jaccardAgainst]]. */
-                         materialize: Boolean = true): DataFrame = {
+                         maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "containmentAgainst needs a positive corpus df cap")
-    val corpusSh0 = shingleArray(corpus, n, idCol, textCol)
+    val corpusSh = Barrier.pin(shingleArray(corpus, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val newSh0 = shingleArray(incoming, n, idCol, textCol)
+      .withColumn("gram", xxhash64(col("gram"))))
+    val newSh = Barrier.pin(shingleArray(incoming, n, idCol, textCol)
       .select(col(idCol).as("a"), size(col("grams")).cast("long").as("na"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val corpusSh = if (materialize) corpusSh0.localCheckpoint() else corpusSh0
-    val newSh = if (materialize) newSh0.localCheckpoint() else newSh0
+      .withColumn("gram", xxhash64(col("gram"))))
     val heavy = corpusSh.groupBy("gram").agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxDocFreq).select("gram")
     val keptCorpus = corpusSh.join(heavy, Seq("gram"), "left_anti")
@@ -702,10 +681,9 @@ object Dedup {
       .join(corpusHeavy.select(col(idCol).as("b"), col("__h").as("__hb")), Seq("b"), "left")
       .withColumn("__hmin",
         least(coalesce(col("__h"), lit(0L)), coalesce(col("__hb"), lit(0L))))
-    val maybe0 = withBounds.where(
+    val maybe = Barrier.pin(withBounds.where(
       (col("ck") + col("__hmin")).cast("double") /
-        least(col("na"), col("nb")) >= lit(threshold))
-    val maybe = if (materialize) maybe0.localCheckpoint() else maybe0
+        least(col("na"), col("nb")) >= lit(threshold)))
     val exactNow = maybe.where(col("__hmin") === 0)
       .select(col("a"), col("b"), col("ck").as("common"), col("na"), col("nb"))
     val needVerify = maybe.where(col("__hmin") > 0).select("a", "b")
@@ -759,17 +737,15 @@ object Dedup {
     * witness a pair. */
   def containmentPairsPrefix(df: DataFrame, n: Int = 3, threshold: Double = 0.8,
                              idCol: String = "doc_id", textCol: String = "text",
-                             maxDocFreq: Int = 20,
-                             materialize: Boolean = true): DataFrame = {
+                             maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "containmentPairsPrefix needs a positive df cap")
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val shx = shingleArray(df, n, idCol, textCol)
+    val shx = Barrier.pin(shingleArray(df, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val shxM = if (materialize) shx.localCheckpoint() else shx
-    val dfCounts = shxM.groupBy("gram").agg(count(lit(1)).as("__df"))
-    val kept = shxM.join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
+      .withColumn("gram", xxhash64(col("gram"))))
+    val dfCounts = shx.groupBy("gram").agg(count(lit(1)).as("__df"))
+    val kept = shx.join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
     val small = prefixStream(kept, idCol, threshold,
         emitWhen = Some(col("__df") >= 2L))
       .select(col(idCol).as("s"), col("n_grams").as("ns"), col("gram"))
@@ -785,7 +761,7 @@ object Dedup {
         greatest(col("s"), col("l")).as("b"))
     val candIds = cand.select(col("a").as(idCol))
       .unionByName(cand.select(col("b").as(idCol))).distinct()
-    val arr = shxM.join(candIds, Seq(idCol), "left_semi")
+    val arr = shx.join(candIds, Seq(idCol), "left_semi")
       .groupBy(idCol).agg(collect_list(col("gram")).as("grams"))
     verifyContainment2(cand, arr, arr, threshold, idCol)
   }
@@ -807,20 +783,17 @@ object Dedup {
   def containmentAgainstPrefix(incoming: DataFrame, corpus: DataFrame,
                                n: Int = 3, threshold: Double = 0.8,
                                idCol: String = "doc_id", textCol: String = "text",
-                               maxDocFreq: Int = 20,
-                               materialize: Boolean = true): DataFrame = {
+                               maxDocFreq: Int = 20): DataFrame = {
     require(maxDocFreq > 0, "containmentAgainstPrefix needs a positive corpus df cap")
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val corpusSh0 = shingleArray(corpus, n, idCol, textCol)
+    val corpusSh = Barrier.pin(shingleArray(corpus, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val newSh0 = shingleArray(incoming, n, idCol, textCol)
+      .withColumn("gram", xxhash64(col("gram"))))
+    val newSh = Barrier.pin(shingleArray(incoming, n, idCol, textCol)
       .select(col(idCol), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .withColumn("gram", xxhash64(col("gram")))
-    val corpusSh = if (materialize) corpusSh0.localCheckpoint() else corpusSh0
-    val newSh = if (materialize) newSh0.localCheckpoint() else newSh0
+      .withColumn("gram", xxhash64(col("gram"))))
     val dfCounts = corpusSh.groupBy("gram").agg(count(lit(1)).as("__df"))
     val keptCorpus = corpusSh
       .join(dfCounts.where(col("__df") <= maxDocFreq), Seq("gram"))
@@ -1026,23 +999,12 @@ object Dedup {
                    * O(grams + k) per doc instead of O(grams·k) — the
                    * tokenizer-scale path; candidate recall equivalent in
                    * expectation, output exact either way (the verify). */
-                 oph: Boolean = false,
-                 /** eager-checkpoint the shingled corpus — [[jaccardPairs]]'
-                   * contract. shArr feeds the signature map AND both sides
-                   * of the exact verify (3 lineage references), and the
-                   * shingle pass is scan-side, so without the barrier each
-                   * reference re-tokenizes + re-shingles the corpus. Pass
-                   * `false` to trade the pin for two extra scans (the
-                   * pre-r20 behavior) when (a) local disk cannot hold the
-                   * shingled corpus, or (b) fault tolerance matters more
-                   * than the rescans: `localCheckpoint` is UNRELIABLE — a
-                   * lost executor loses its pinned partitions and fails the
-                   * job instead of recomputing lineage (ADVICE r20), a real
-                   * trade on long cluster runs that local mode never sees. */
-                 materialize: Boolean = true): DataFrame = {
+                 oph: Boolean = false): DataFrame = {
     val bands = numHashes / rowsPerBand
-    val shArr0 = shingleArray(df, n, idCol, textCol)
-    val shArr = if (materialize) shArr0.localCheckpoint() else shArr0
+    // shArr feeds the signature map AND both sides of the exact verify (3
+    // lineage references), and the shingle pass is scan-side, so without
+    // the barrier each reference re-tokenizes + re-shingles the corpus
+    val shArr = Barrier.pin(shingleArray(df, n, idCol, textCol))
     // gramless docs (shorter than n words / NULL text) get NO signature —
     // otherwise every one of them shares the all-MaxValue signature and they
     // band-bucket into a quadratic candidate clique
@@ -1149,7 +1111,7 @@ object Dedup {
     if (packedArgmax)
       labeled
         .select(col("cluster_id"),
-          packArgmax(col(qualityCol), col(idCol)).as("__best"))
+          packArgmax(docs, qualityCol, idCol).as("__best"))
         .groupBy("cluster_id")
         .agg(min("__best").as("best"), count(lit(1)).as("n_docs"))
         .select(col("cluster_id"),

@@ -186,8 +186,11 @@ object Sketches {
     val typed = items.select(col(itemCol).cast("string").as("item"))
       .where(col("item").isNotNull)
     // phase 1: per-partition MG survivors, plus one (null, Nₚ) row per
-    // partition so the total comes out of the same pass
-    val summaries = typed.as[String].mapPartitions { it =>
+    // partition so the total comes out of the same pass. Tiny (≤ (k+1)·P
+    // rows) but costs a full input pass — pinned ONCE, so neither the total
+    // below nor the lazy candidate join re-runs the MG pass (a persist
+    // would be freed before the caller's action runs)
+    val summaries = Barrier.pin(typed.as[String].mapPartitions { it =>
       val counters = scala.collection.mutable.HashMap.empty[String, Long]
       var n = 0L
       it.foreach { x =>
@@ -207,12 +210,7 @@ object Sketches {
       }
       counters.keysIterator.map(w => (Option(w), 0L)) ++
         Iterator((scala.Option.empty[String], n))
-    }.toDF("item", "n")
-      // tiny (≤ (k+1)·P rows) but costs a full input pass — eager local
-      // checkpoint materializes it ONCE and truncates lineage, so neither
-      // the total below nor the lazy candidate join re-runs the MG pass
-      // (a persist would be freed before the caller's action runs)
-      .localCheckpoint()
+    }.toDF("item", "n"))
     val total = summaries.where(col("item").isNull)
       .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
     val minCount = math.ceil(phi * total).toLong.max(1L)

@@ -230,24 +230,17 @@ object TextAnalysis {
     * word alone (map-side combinable, no skew: df caps at N). Rank is
     * deterministic: (rounded score desc, word asc). */
   def tfIdf(df: DataFrame, topK: Int = 3,
-            idCol: String = "doc_id", textCol: String = "text",
-            /** eager-checkpoint the per-(doc, word) tf — same contract and
-              * same escape hatch as [[unigramLogProb]]: `false` keeps the
-              * plan fully lazy (cache-matchable, explain-only inspection
-              * pays nothing) for callers that bound recomputation
-              * themselves, e.g. [[tfIdfCosine]]'s own `kept` barrier. */
-            materialize: Boolean = true): DataFrame = {
+            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = df.select(col(idCol), explode(words(col(textCol))).as("word"))
       .where(col("word") =!= "")
-    // ONE tokenization pass: tf is checkpointed (eager, executor-local) and
+    // ONE tokenization pass: tf is pinned ([[Barrier.pin]]) and
     // document frequency derives from it — tf has exactly one row per
     // (doc, word), so count-per-word over tf IS count(DISTINCT doc) per
     // word. The old second `ws.distinct().groupBy` lineage re-tokenized
     // the corpus (column pruning below the exchange defeats ReusedExchange
     // — the ccnet pin's documented failure mode).
-    val tf0 = ws.groupBy(idCol, "word").agg(count("*").as("tf"))
-    val tf = if (materialize) tf0.localCheckpoint() else tf0
+    val tf = Barrier.pin(ws.groupBy(idCol, "word").agg(count("*").as("tf")))
     val wdf = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = df.agg(count("*").as("n_docs"))
     tf.join(wdf, Seq("word"))
@@ -292,10 +285,7 @@ object TextAnalysis {
     * map-side-combinable, no window over raw pairs. */
   def tfIdfCosine(df: DataFrame, topTerms: Int = 10, threshold: Double = 0.3,
                   maxKeptDf: Int = 0,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  /** `false` = fully lazy (no barrier at all) — the same
-                    * escape hatch every sibling carries. */
-                  materialize: Boolean = true): DataFrame = {
+                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(topTerms >= 1, s"topTerms must be >= 1: $topTerms")
     // kept is referenced by norms, the candidate join's BOTH sides and the
     // verify join's both sides — up to 7 consumers. Checkpoint the ≤
@@ -309,9 +299,8 @@ object TextAnalysis {
     // re-runs the tokenize subtree even while building this one `kept`
     // checkpoint — the double barrier is two bounded jobs, the single
     // barrier is a doubled corpus pass.
-    val kept0 = tfIdf(df, topTerms, idCol, textCol, materialize = materialize)
-      .select(col(idCol), col("word"), col("score"))
-    val kept = if (materialize) kept0.localCheckpoint() else kept0
+    val kept = Barrier.pin(tfIdf(df, topTerms, idCol, textCol)
+      .select(col(idCol), col("word"), col("score")))
     val norms = kept.groupBy(idCol)
       .agg(sqrt(sum(col("score") * col("score"))).as("nrm"))
       .where(col("nrm") > 0)
@@ -357,22 +346,14 @@ object TextAnalysis {
     * the right plan), one scalar broadcast of total token count. No driver
     * collection, no UDF — every expression codegen'd. */
   def unigramLogProb(df: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text",
-                     /** eager-checkpoint the per-(doc, word) tf so corpus
-                       * frequency / token total derive from ONE
-                       * tokenization pass. [[ccnetBuckets]] passes `false`:
-                       * its own plan-keyed persist already bounds the
-                       * recomputation, and a checkpoint's nondeterministic
-                       * RDD leaf would defeat that CacheManager match. */
-                     materialize: Boolean = true): DataFrame = {
+                     textCol: String = "text"): DataFrame = {
     val ws = df.select(col(idCol), explode(words(col(textCol))).as("word"))
       .where(col("word") =!= "")
     // ONE tokenization pass (the [[tfIdf]] move): corpus frequency and the
     // total token count are exact integer sums over the checkpointed tf
     // partials — the old three independent `ws` lineages each re-tokenized
     // the corpus (no exchange reuse across differently-pruned columns).
-    val tf0 = ws.groupBy(idCol, "word").agg(count("*").as("tf"))
-    val tf = if (materialize) tf0.localCheckpoint() else tf0
+    val tf = Barrier.pin(ws.groupBy(idCol, "word").agg(count("*").as("tf")))
     val cf = tf.groupBy("word").agg(sum("tf").as("cf"))
     val n = cf.agg(sum("cf").as("n_total"))
     tf.join(cf, Seq("word"))
@@ -441,8 +422,8 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     require(buckets > 0)
     // lazy LM: the persist below is keyed on the canonicalized plan, and a
-    // checkpoint's fresh RDD leaf would miss it on every rebuild
-    val nll = unigramLogProb(df, idCol, textCol, materialize = false)
+    // pin's fresh RDD leaf would miss it on every rebuild
+    val nll = Barrier.lazily(unigramLogProb(df, idCol, textCol))
     val scored = df.select(col(idCol), col(langCol)).join(nll, Seq(idCol))
     var handle: Option[DataFrame] = None
     val labeled =
@@ -504,20 +485,13 @@ object TextAnalysis {
     * unigram frequency can't (common words in nonsense order). Documents
     * with fewer than two tokens produce no row. Same plan skeleton: the
     * per-doc bigram stream is one codegen'd transform+explode, then three
-    * compact-key hash aggregations and two joins on bigram/context keys. */
+    * compact-key hash aggregations and two joins on bigram/context keys.
+    *
+    * No barrier on the per-(doc, l, r) tf, unlike [[unigramLogProb]]: it is
+    * nearly the size of the bigram stream (in-document repeats are rare), so
+    * pinning it measured slower than the two tokenize passes it saves. */
   def bigramLogProb(df: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text",
-                    /** default LAZY — the opposite of [[unigramLogProb]],
-                      * by measurement: the per-(doc, l, r) tf is nearly the
-                      * size of the bigram stream itself (in-document bigram
-                      * repeats are rare), so pinning it costs more than the
-                      * two extra tokenize passes it saves. r20's committed
-                      * checkpoint default was slower in BOTH independent
-                      * records (sidecar 1.17→1.42 s, driver min-of-2
-                      * 1.45→2.19 s) and the r21 idle-host interleaved
-                      * min-of-8 re-witness confirmed it (lazy 1.28 s vs
-                      * checkpoint 1.34 s) — VERDICT r20 #1 settled. */
-                    materialize: Boolean = false): DataFrame = {
+                    textCol: String = "text"): DataFrame = {
     val bi = df.select(col(idCol), words(col(textCol)).as("__ws"))
       .where(size(col("__ws")) >= 2)
       .select(col(idCol), explode(expr(
@@ -525,10 +499,8 @@ object TextAnalysis {
           "i -> struct(element_at(__ws, i) AS l, element_at(__ws, i + 1) AS r))"))
         .as("__bi"))
       .select(col(idCol), col("__bi.l").as("l"), col("__bi.r").as("r"))
-    // ONE bigram-stream pass (the [[unigramLogProb]] move): both corpus
-    // counts are exact integer sums over the checkpointed per-doc tf.
-    val tf0 = bi.groupBy(idCol, "l", "r").agg(count("*").as("tf"))
-    val tf = if (materialize) tf0.localCheckpoint() else tf0
+    // both corpus counts are exact integer sums over the per-doc tf
+    val tf = bi.groupBy(idCol, "l", "r").agg(count("*").as("tf"))
     val c2 = tf.groupBy("l", "r").agg(sum("tf").as("c2"))
     val cl = tf.groupBy("l").agg(sum("tf").as("cl"))
     tf.join(c2, Seq("l", "r")).join(cl, Seq("l"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Barrier, Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Oracle-checked training-data pipeline operators: dedup family, similarity
   * search, text analysis, multimodal plumbing. Spark side = the ops modules
@@ -1058,9 +1058,8 @@ object DataOpsQueries {
         // (warm 5.6 → 6.4 s) because serializing the full corpus into a
         // fourth stage barrier costs more than the scoring it saves; the
         // id-only pin keeps that saving without the corpus-sized write.
-        val gateIds = TextAnalysis.gopherFilter(docs)
-          .where(col("passes_gopher")).select("doc_id")
-          .localCheckpoint()
+        val gateIds = Barrier.pin(TextAnalysis.gopherFilter(docs)
+          .where(col("passes_gopher")).select("doc_id"))
         val gated = docs.join(gateIds, Seq("doc_id"))
         // 2. LINE DEDUP: induce line structure, drop corpus-heavy lines;
         // docs with no surviving line fall out of the corpus
@@ -1070,7 +1069,7 @@ object DataOpsQueries {
         val lined = TextAnalysis.lineDedup(
           gated.withColumn("text", regexp_replace(col("text"), " (the|a) ", "\n")),
           minDf = 3, hashKeys = true)
-        // Stage boundaries CHECKPOINT (eager, executor-local): in the
+        // Stage boundaries are PINNED ([[Barrier.pin]]): in the
         // reference every pipeline stage is a materialized asset, and the
         // dedup / contamination stages each fan the previous stage into
         // several plan branches. A plain persist is not enough here — the
@@ -1080,10 +1079,9 @@ object DataOpsQueries {
         // at each stage makes every later stage plan against a leaf.
         // 52 s → ~8 s at sf0.1, and the same move a 100 TB run makes by
         // writing each stage to a table.
-        val cleaned = gated.drop("text").join(
+        val cleaned = Barrier.pin(gated.drop("text").join(
           lined.where(col("n_lines_kept") >= 1)
-            .select(col("doc_id"), col("text_deduped").as("text")), Seq("doc_id"))
-          .localCheckpoint()
+            .select(col("doc_id"), col("text_deduped").as("text")), Seq("doc_id")))
         // 3. FUZZY DEDUP on the cleaned text: any >= 0.5-Jaccard pair drops
         // its higher id (df-capped candidate generation, exact re-verify).
         // [[Dedup.jaccardPairsPrefix]] is an output-identical drop-in when
@@ -1093,16 +1091,14 @@ object DataOpsQueries {
         val losers = Dedup.jaccardPairs(cleaned, n = 3, threshold = 0.5,
             maxDocFreq = 20)
           .select(col("b").as("doc_id")).distinct()
-        val fuzzy = cleaned.join(losers, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+        val fuzzy = Barrier.pin(cleaned.join(losers, Seq("doc_id"), "left_anti"))
         // 4. DECONTAMINATION: the eval slice (bucket < 10) leaves the
         // training corpus, and so does any train doc sharing a 5-gram
         val b = graft.ops.Sampling.hashBucket(col("doc_id"))
         val train = fuzzy.where(b >= 10)
         val dirty = Dedup.contamination(train, fuzzy.where(b < 10), n = 5)
           .select("doc_id")
-        val decon = train.join(dirty, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+        val decon = Barrier.pin(train.join(dirty, Seq("doc_id"), "left_anti"))
         // 5. MIXTURE: rebalance surviving docs to the target lang weights
         val mixed = graft.ops.Sampling.mixture(decon, "lang",
           Map("en" -> 0.4, "de" -> 0.2, "es" -> 0.2, "fr" -> 0.1, "zh" -> 0.1))

@@ -225,7 +225,7 @@ class DataOpsSpec extends AnyFunSuite {
     // pairs sharing ONLY over-cap grams are outside the capped contract
     assert(!capped.contains((5L, 6L)))
     // lazy form: no cartesian product anywhere in the plan
-    val plan = Dedup.containmentPairs(docs, 3, 0.8, materialize = false)
+    val plan = graft.ops.Barrier.lazily(Dedup.containmentPairs(docs, 3, 0.8))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Cartesian"), s"containment must not go quadratic:\n$plan")
   }
@@ -1633,9 +1633,15 @@ class DataOpsSpec extends AnyFunSuite {
     // lineage truncation goes through fault-tolerant checkpoint files
     // (survives executor loss on a real cluster) and learns the same merges
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-bpe-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
-    val c = Bpe.bpeMerges(docs, numMerges = 6, checkpointEvery = 2).collect().toSeq
-    assert(c == a, "reliable-checkpoint train must learn identical merges")
+    try {
+      spark.sparkContext.setCheckpointDir(ckptDir.toString)
+      val c = Bpe.bpeMerges(docs, numMerges = 6, checkpointEvery = 2).collect().toSeq
+      assert(c == a, "reliable-checkpoint train must learn identical merges")
+    } finally {
+      // the session is shared: a leaked dir would make every later pin reliable
+      org.apache.spark.GraftTestHooks.clearCheckpointDir(spark.sparkContext)
+      graft.core.Fs.deleteRecursively(ckptDir)
+    }
   }
 
   test("token-budget selection keeps the quality-ranked greedy prefix") {

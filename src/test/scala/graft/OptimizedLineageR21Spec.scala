@@ -65,35 +65,39 @@ class OptimizedLineageR21Spec extends AnyFunSuite {
 
   test("packed argmax out-of-bounds data raises instead of mis-selecting") {
     import spark.implicits._
-    val bad = Seq((1L, "t", -3L)).toDF("doc_id", "text", "n_chars")
-    val e = intercept[Exception] {
-      graft.ops.Dedup.exactKeepBest(bad, packedArgmax = true).collect()
-    }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => String.valueOf(x.getMessage) +: messages(x.getCause))
-    assert(messages(e).exists(_.contains("packedArgmax bounds violated")),
-      s"expected the bounds assertion, got: $e")
+    def raises(df: org.apache.spark.sql.DataFrame, expected: String): Unit = {
+      val e = intercept[Exception](
+        graft.ops.Dedup.exactKeepBest(df, packedArgmax = true).collect())
+      assert(messages(e).exists(_.contains(expected)), s"expected '$expected', got: $e")
+    }
+    raises(Seq((1L, "t", -3L)).toDF("doc_id", "text", "n_chars"),
+      "packedArgmax bounds violated")
+    // a fractional quality would truncate (5.7 and 5.2 tie) — rejected by type
+    raises(Seq((1L, "t", 5.7), (2L, "t", 5.2)).toDF("doc_id", "text", "n_chars"),
+      "packedArgmax needs an integral quality column")
+    // a NULL part must still produce the bounds text, not a null message
+    raises(Seq((1L, "t", None: Option[Long])).toDF("doc_id", "text", "n_chars"),
+      "packedArgmax bounds violated: quality=null id=1")
   }
 
   test("tfIdf family lazy escapes stay cache-matchable; defaults checkpoint") {
-    val a = graft.ops.TextAnalysis.tfIdf(docs, materialize = false)
-    val b = graft.ops.TextAnalysis.tfIdf(docs, materialize = false)
+    import graft.ops.Barrier
+    val a = Barrier.lazily(graft.ops.TextAnalysis.tfIdf(docs))
+    val b = Barrier.lazily(graft.ops.TextAnalysis.tfIdf(docs))
     assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed),
       "lazy tfIdf must canonicalize stable (plan-keyed caches)")
-    val c = graft.ops.TextAnalysis.bigramLogProb(docs, materialize = false)
-    val d = graft.ops.TextAnalysis.bigramLogProb(docs, materialize = false)
+    val c = graft.ops.TextAnalysis.bigramLogProb(docs)
+    val d = graft.ops.TextAnalysis.bigramLogProb(docs)
     assert(c.queryExecution.analyzed.sameResult(d.queryExecution.analyzed),
       "lazy bigramLogProb must canonicalize stable")
-    // bigram's default is LAZY (the r21 re-witness — see the parameter doc);
-    // the checkpoint escape hatch must still truncate lineage when asked
+    // bigram has no barrier at all (measured slower pinned — see its doc)
     assert(rddLeaves(graft.ops.TextAnalysis.bigramLogProb(docs)
         .queryExecution.optimizedPlan) == 0,
-      "default bigramLogProb must stay lazy (measured faster at every record)")
-    assert(rddLeaves(graft.ops.TextAnalysis.bigramLogProb(docs, materialize = true)
-        .queryExecution.optimizedPlan) >= 1,
-      "bigramLogProb's checkpoint escape hatch must truncate lineage")
-    assert(rddLeaves(graft.ops.TextAnalysis.tfIdfCosine(docs, topTerms = 3,
-        threshold = 0.3, maxKeptDf = 20, materialize = false)
+      "bigramLogProb must stay lazy (measured faster at every record)")
+    assert(rddLeaves(Barrier.lazily(graft.ops.TextAnalysis.tfIdfCosine(docs, topTerms = 3,
+        threshold = 0.3, maxKeptDf = 20))
         .queryExecution.optimizedPlan) == 0,
       "lazy tfIdfCosine must stay fully lazy")
   }

@@ -81,12 +81,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("capped jaccard subtracts heavy grams before any gram self-join") {
-    // inspect the LAZY form: the registered query's default materialization
-    // checkpoints the shared stages eagerly, which truncates exactly the
-    // lineage this pin needs to see (the executed work is identical)
+    // inspect the LAZY form: the registered query pins the shared stages
+    // eagerly, which truncates exactly the lineage this pin needs to see
+    // (the executed work is identical)
     graft.core.Tables.register(spark, sfDir)
-    val p = graft.ops.Dedup.jaccardPairs(spark.table("documents"),
-      n = 3, threshold = 0.5, maxDocFreq = 20, materialize = false)
+    val p = graft.ops.Barrier.lazily(graft.ops.Dedup.jaccardPairs(
+      spark.table("documents"), n = 3, threshold = 0.5, maxDocFreq = 20))
       .queryExecution.executedPlan.toString
     // the boilerplate blowup guard: every gram-keyed self-join input must
     // first pass the LeftAnti subtraction of over-cap grams, so the join's
@@ -108,8 +108,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("containment pairs share the capped jaccard plan discipline") {
     graft.core.Tables.register(spark, sfDir)
-    val p = graft.ops.Dedup.containmentPairs(spark.table("documents"),
-      n = 3, threshold = 0.8, maxDocFreq = 20, materialize = false)
+    val p = graft.ops.Barrier.lazily(graft.ops.Dedup.containmentPairs(
+      spark.table("documents"), n = 3, threshold = 0.8, maxDocFreq = 20))
       .queryExecution.executedPlan.toString
     // same scale guards as the capped jaccard pin: over-cap grams
     // subtracted before the self-join, per-doc heavy counts via semi-join,
@@ -127,8 +127,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("prefix jaccard pairs candidates from sliced prefix streams only") {
     graft.core.Tables.register(spark, sfDir)
-    val selfQe = graft.ops.Dedup.jaccardPairsPrefix(spark.table("documents"),
-      n = 3, threshold = 0.5, maxDocFreq = 20, materialize = false)
+    val selfQe = graft.ops.Barrier.lazily(graft.ops.Dedup.jaccardPairsPrefix(
+      spark.table("documents"), n = 3, threshold = 0.5, maxDocFreq = 20))
       .queryExecution
     // expression-level asserts read the OPTIMIZED LOGICAL plan: physical
     // ObjectHashAggregate.toString lists only its agg functions, so
@@ -154,9 +154,9 @@ class PlanSpec extends AnyFunSuite {
     assert(!selfPhys.contains("CartesianProduct"))
     val docs = spark.table("documents")
     import org.apache.spark.sql.functions.col
-    val incQe = graft.ops.Dedup.jaccardAgainstPrefix(
+    val incQe = graft.ops.Barrier.lazily(graft.ops.Dedup.jaccardAgainstPrefix(
       docs.where(col("doc_id") % 10 === 3), docs.where(col("doc_id") % 10 =!= 3),
-      n = 3, threshold = 0.5, maxDocFreq = 20, materialize = false)
+      n = 3, threshold = 0.5, maxDocFreq = 20))
       .queryExecution
     val inc = incQe.optimizedPlan.toString
     assert(inc.contains("slice(") && inc.contains("sort_array") &&
